@@ -22,8 +22,8 @@ Iceberg-shaped metadata:
   field-id-keyed ``lower_bounds``/``upper_bounds`` from the
   manifest-recorded stats (Iceberg single-value binary encoding).
 - The Avro container writer below implements the Avro 1.x spec from
-  scratch (magic, null + deflate codecs, zigzag varints, blocks,
-  sync markers) — no Avro library exists in this environment.
+  scratch (magic, zigzag varints, blocks, sync markers; block codecs
+  from :mod:`.codecs`) — no Avro library exists in this environment.
   Manifest files are written via write-then-rename so readers never
   see a torn container.
 - ``tests/test_iceberg_export.py`` round-trips the export through an
@@ -52,7 +52,9 @@ import os
 import struct
 import time
 import uuid
+import zlib
 
+from . import codecs
 from .snapshots import MAIN, SnapshotError, SnapshotTable
 
 # ------------------------------------------------------------ avro write
@@ -131,45 +133,20 @@ def _encode_value(schema, value) -> bytes:
 def write_avro(
     path: str, schema: dict, records: list[dict], codec: str = "null"
 ) -> None:
-    """One-block Avro object container file. Codecs: ``null`` /
-    ``deflate`` (what real engines default manifest Avro to) plus the
-    Avro spec's ``snappy`` (pure-Python block format + the spec's
-    big-endian CRC32 of the uncompressed data), ``bzip2`` and ``xz``
-    (stdlib), and ``zstandard`` (pure-Python RFC 8878 both directions:
-    :mod:`.zstd` reads, :mod:`.zstd_encode` writes)."""
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    """One-block Avro object container file, in any of the Avro spec's
+    codecs (:data:`.codecs.AVRO_CODECS`); ``snappy`` blocks carry the
+    spec's big-endian CRC32 of the uncompressed data."""
+    if codec not in codecs.AVRO_CODECS:
         raise ValueError(f"unsupported avro codec {codec!r}")
     sync = uuid.uuid4().bytes
     meta = {
         "avro.schema": json.dumps(schema).encode(),
         "avro.codec": codec.encode(),
     }
-    body = b"".join(_encode_value(schema, r) for r in records)
-    if codec == "deflate":
-        import zlib
-
-        body = zlib.compress(body)[2:-4]  # raw deflate: no header/adler
-    elif codec == "snappy":
-        import struct as _struct
-        import zlib as _zlib
-
-        from .snappy import compress as _snappy_compress
-
-        body = _snappy_compress(body) + _struct.pack(
-            ">I", _zlib.crc32(body) & 0xFFFFFFFF
-        )
-    elif codec == "bzip2":
-        import bz2
-
-        body = bz2.compress(body)
-    elif codec == "xz":
-        import lzma
-
-        body = lzma.compress(body, format=lzma.FORMAT_XZ)
-    elif codec == "zstandard":
-        from .zstd_encode import compress as _zstd_compress
-
-        body = _zstd_compress(body)
+    raw = b"".join(_encode_value(schema, r) for r in records)
+    body = codecs.compress(codec, raw)
+    if codec == "snappy":
+        body += struct.pack(">I", zlib.crc32(raw) & 0xFFFFFFFF)
     with open(path, "wb") as f:
         f.write(_MAGIC)
         f.write(_enc_long(len(meta)))
@@ -698,23 +675,20 @@ _CODEC_PROPERTY_NAMES = {
 
 
 def _exporter_fingerprint() -> str:
-    """A hash of the source that SHAPES exported bytes — this module
-    plus the codec modules its write path can route through
-    (zstd_encode, snappy): any exporter OR encoder code change
+    """A hash of what SHAPES exported bytes — this module, the codec
+    module its write path routes through, and the pyarrow version whose
+    libzstd/snappy builds encode: any exporter, codec or library change
     invalidates reuse caches automatically, so a stale /tmp fixture
     can never keep serving bytes the current code would not write."""
-    import hashlib
-
     global _EXPORTER_FP
     if _EXPORTER_FP is None:
+        import pyarrow as pa
+
         h = hashlib.md5()
-        here = os.path.dirname(os.path.abspath(__file__))
-        for fname in (__file__, "zstd_encode.py", "snappy.py"):
-            try:
-                with open(os.path.join(here, fname), "rb") as f:
-                    h.update(f.read())
-            except OSError:
-                h.update(b"missing:" + fname.encode())
+        for path in (__file__, codecs.__file__):
+            with open(path, "rb") as f:
+                h.update(f.read())
+        h.update(pa.__version__.encode())
         _EXPORTER_FP = h.hexdigest()
     return _EXPORTER_FP
 
@@ -880,8 +854,8 @@ def export_iceberg_metadata(
 
     ``compression``: Avro codec for the manifests and manifest lists —
     ``null`` (default), ``deflate``/``snappy``/``bzip2``/``xz``, or
-    ``zstd``/``zstandard`` (pure-Python RFC 8878 encoder,
-    :mod:`.zstd_encode`). The codec rides the doc's
+    ``zstd``/``zstandard`` (libzstd through :mod:`.codecs`). The codec
+    rides the doc's
     ``write.avro.compression-codec`` property and tags the minted file
     names; ``reuse`` matches on it, so codec switches never serve a
     prior export's differently-coded files and same-codec re-exports
@@ -900,12 +874,12 @@ def export_iceberg_metadata(
     if head is None:
         raise SnapshotError(f"no committed snapshot at {table.path}")
     # manifest/manifest-list Avro codec. 'zstd' is the Avro spec's
-    # 'zstandard' (accept both spellings; pure-Python both directions).
+    # 'zstandard' (accept both spellings).
     # Non-null codecs tag the content fingerprint so switching codec
     # mints new files instead of silently reusing old-codec ones, while
     # default exports keep their historical file names byte-stable.
     codec = {"zstd": "zstandard"}.get(compression, compression)
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    if codec not in codecs.AVRO_CODECS:
         raise SnapshotError(
             f"unsupported manifest compression {compression!r}"
         )
@@ -2177,11 +2151,9 @@ def _compile_decoder(schema):
 
 
 def read_avro(path: str) -> tuple[dict, list]:
-    """Decode an Avro object container: ``null`` / ``deflate`` (the
-    codecs real engines default manifest Avro to) plus ``snappy``
-    (pure-Python block-format decoder, CRC32-verified per the Avro
-    spec), ``bzip2`` and ``xz`` (stdlib), and ``zstandard``
-    (pure-Python RFC 8878 frame decoder, see :mod:`.zstd`)."""
+    """Decode an Avro object container in any of the Avro spec's codecs
+    (:data:`.codecs.AVRO_CODECS`); ``snappy`` blocks are CRC32-verified
+    per the spec."""
     r = _AvroReader(open(path, "rb").read())
     if r._take(4) != _MAGIC:
         raise ValueError("not an avro object container")
@@ -2198,7 +2170,7 @@ def read_avro(path: str) -> tuple[dict, list]:
             meta[k] = r._take(r._long())
     schema = json.loads(meta["avro.schema"])
     codec = meta.get("avro.codec", b"null").decode() or "null"
-    if codec not in ("null", "deflate", "snappy", "bzip2", "xz", "zstandard"):
+    if codec not in codecs.AVRO_CODECS:
         raise ValueError(f"unsupported avro codec {codec!r}")
     sync = r._take(16)
     decode = _compile_decoder(schema)
@@ -2206,42 +2178,20 @@ def read_avro(path: str) -> tuple[dict, list]:
     while r.pos < len(r.data):
         cnt = r._long()
         body = r._take(r._long())
-        if codec == "deflate":
-            import zlib
-
-            body = zlib.decompress(body, -15)  # raw deflate per spec
-        elif codec == "snappy":
-            import zlib as _zlib
-
-            from .snappy import SnappyError, decompress as _snappy
-
+        crc = None
+        if codec == "snappy":
             if len(body) < 4:
                 raise ValueError("snappy avro block: missing CRC32")
             crc = int.from_bytes(body[-4:], "big")  # spec: big-endian
-            try:
-                body = _snappy(body[:-4])
-            except SnappyError as exc:
-                raise ValueError(f"snappy avro block: {exc}") from exc
-            if _zlib.crc32(body) & 0xFFFFFFFF != crc:
-                raise ValueError(
-                    "snappy avro block: CRC32 mismatch on "
-                    "uncompressed data"
-                )
-        elif codec == "bzip2":
-            import bz2
-
-            body = bz2.decompress(body)
-        elif codec == "xz":
-            import lzma
-
-            body = lzma.decompress(body)
-        elif codec == "zstandard":
-            from .zstd import ZstdError, decompress as _zstd
-
-            try:
-                body = _zstd(body)
-            except ZstdError as exc:
-                raise ValueError(f"zstandard avro block: {exc}") from exc
+            body = body[:-4]
+        try:
+            body = codecs.decompress(codec, body)
+        except codecs.CodecError as exc:
+            raise ValueError(f"{codec} avro block: {exc}") from exc
+        if crc is not None and zlib.crc32(body) & 0xFFFFFFFF != crc:
+            raise ValueError(
+                "snappy avro block: CRC32 mismatch on uncompressed data"
+            )
         br = _AvroReader(body)
         for _ in range(cnt):
             records.append(decode(br))

@@ -1,11 +1,9 @@
-"""Pins for the four ADVICE r15 fixes taken in the r16 round.
+"""Pins for the ADVICE r15 fixes taken in the r16 round.
 
-1. zstd compress() refuses payloads past the 128 MiB default window
-   limit stock decoders enforce on single-segment frames.
-2. codec_tag normalizes 'zstandard' to the historical 'zstd-' family.
-3. _latest_reusable skips a torn newest candidate instead of
+1. codec_tag normalizes 'zstandard' to the historical 'zstd-' family.
+2. _latest_reusable skips a torn newest candidate instead of
    disabling reuse.
-4. REST stage-create over a table whose metadata file is corrupt
+3. REST stage-create over a table whose metadata file is corrupt
    falls back to a fresh uuid instead of a 500.
 """
 
@@ -14,21 +12,7 @@ from __future__ import annotations
 import json
 import os
 
-import pytest
-
-from iceberg_catalog_migrator_spark.sources.zstd_encode import (
-    MAX_SINGLE_SEGMENT_INPUT,
-    compress,
-)
-
 SF = "/root/testdata/sf0.01"
-
-
-def test_compress_refuses_over_window_limit():
-    with pytest.raises(ValueError, match="128 MiB default window"):
-        compress(bytes(MAX_SINGLE_SEGMENT_INPUT + 1))
-    # boundary stays accepted (RLE-compresses instantly)
-    assert compress(b"a" * 1024)
 
 
 def test_codec_tag_zstandard_aliases_to_zstd_family(spark, tmp_path):

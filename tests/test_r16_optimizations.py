@@ -72,11 +72,21 @@ def test_min_label_propagate_respects_round_bound(spark):
     pairs = [(i, i + 1) for i in range(0, 12)]
     assert D._min_label_propagate(_sym(spark, pairs), 2) is None
     # bound 1 would skip the loop entirely and could return None even
-    # for an empty edge list (ADVICE r16): asserted away
-    import pytest
-
-    with pytest.raises(AssertionError):
+    # for an empty edge list (ADVICE r16): refused with ValueError
+    with pytest.raises(ValueError, match=">= 2 rounds"):
         D._min_label_propagate(_sym(spark, pairs), 1)
+
+
+def test_pin_reads_disable_knob_per_call(spark, monkeypatch):
+    """SPARK_GRAFT_DISABLE_PINS set after import still disables a pin:
+    the knob is read when used, not frozen at import."""
+    df = spark.range(3)
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_PINS", "other, probe_tag")
+    assert D._pin(df, "probe_tag") is df
+    monkeypatch.setenv("SPARK_GRAFT_DISABLE_PINS", "all")
+    assert D._pin(df, "any_tag") is df
+    monkeypatch.delenv("SPARK_GRAFT_DISABLE_PINS")
+    assert D._pin(df, "probe_tag") is not df
 
 
 # ------------------------------------------------- grouped CDC snapshot

@@ -1,10 +1,11 @@
-"""Pure-Python snappy block format: HAND-CRAFTED byte fixtures
-assembled directly from the public format description (tag kinds,
-varint preamble, extended literal lengths, all three copy widths,
-overlapping copies) — never via compress() — so the encoder and the
-decoder cannot share a wrong layout assumption (the test_puffin.py
-rule). Plus round-trips, Avro container integration, and the foreign-
-tree import path with snappy-compressed manifests."""
+"""snappy through sources/codecs.py (the snappy library pyarrow links):
+HAND-CRAFTED byte fixtures assembled directly from the public format
+description (tag kinds, varint preamble, extended literal lengths, all
+three copy widths, overlapping copies) — never via compress() — so the
+decode path is checked against the format rather than its own writer
+(the test_puffin.py rule). Plus round-trips, zstandard and snappy
+decoder refusals, Avro container integration, and the foreign-tree
+import path with snappy-compressed manifests."""
 
 import json
 import os
@@ -13,11 +14,17 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from iceberg_catalog_migrator_spark.sources.snappy import (
-    SnappyError,
-    compress,
-    decompress,
-)
+from iceberg_catalog_migrator_spark.sources import codecs
+
+SnappyError = codecs.CodecError
+
+
+def compress(data: bytes) -> bytes:
+    return codecs.compress("snappy", data)
+
+
+def decompress(raw: bytes) -> bytes:
+    return codecs.decompress("snappy", raw)
 
 
 def _lit(payload: bytes) -> bytes:
@@ -88,27 +95,34 @@ def test_overlapping_copy_repeats():
 
 def test_preamble_mismatch_refuses():
     raw = bytes([9]) + _lit(b"hello")
-    with pytest.raises(SnappyError, match="declared 9"):
+    with pytest.raises(SnappyError, match="snappy"):
         decompress(raw)
+    # a preamble claiming 2 GiB refuses before allocating the output
+    raw = bytes([0x80, 0x80, 0x80, 0x80, 0x08]) + _lit(b"hello")
+    with pytest.raises(SnappyError, match="snappy: preamble declares"):
+        decompress(raw)
+    # a preamble that never terminates is not a varint
+    with pytest.raises(SnappyError, match="snappy: preamble is not"):
+        decompress(bytes([0xFF] * 5) + _lit(b"hello"))
 
 
 def test_truncated_literal_refuses():
     raw = bytes([10]) + bytes([9 << 2]) + b"abc"
-    with pytest.raises(SnappyError, match="truncated literal"):
+    with pytest.raises(SnappyError, match="snappy"):
         decompress(raw)
 
 
 def test_copy_before_start_refuses():
     tag = ((4 - 1) << 2) | 2
     raw = bytes([8]) + _lit(b"ab") + bytes([tag]) + struct.pack("<H", 7)
-    with pytest.raises(SnappyError, match="outside window"):
+    with pytest.raises(SnappyError, match="snappy"):
         decompress(raw)
 
 
 def test_zero_offset_refuses():
     tag = ((4 - 1) << 2) | 2
     raw = bytes([8]) + _lit(b"abcd") + bytes([tag]) + struct.pack("<H", 0)
-    with pytest.raises(SnappyError, match="outside window"):
+    with pytest.raises(SnappyError, match="snappy"):
         decompress(raw)
 
 
@@ -128,6 +142,21 @@ def test_compress_roundtrip(data):
 def test_compress_long_literal_chunks():
     data = os.urandom(70_000)
     assert decompress(compress(data)) == data
+
+
+@pytest.mark.parametrize("codec", ["zstandard", "snappy"])
+@pytest.mark.parametrize("damage", ["corrupt", "truncated", "empty"])
+def test_decoder_refusals_name_the_codec(codec, damage):
+    """A damaged block raises a ValueError that names its codec, never
+    a silent short or padded decode."""
+    good = codecs.compress(codec, b"manifest-entry-0123456789/" * 400)
+    bad = {
+        "corrupt": bytes(len(good)),
+        "truncated": good[: len(good) // 2],
+        "empty": b"",
+    }[damage]
+    with pytest.raises(ValueError, match=codec):
+        codecs.decompress(codec, bad)
 
 
 # --------------------------------------------------- avro integration
@@ -153,14 +182,15 @@ def test_avro_container_snappy_roundtrip(tmp_path):
     # the container really declares the snappy codec (the decode above
     # travelled the snappy + CRC path, not a null-codec shortcut)...
     assert b"snappy" in open(p, "rb").read(200)
-    # ...and the hash-match encoder genuinely compresses the
-    # repetitive payload
+    # ...and the encoder genuinely compresses the repetitive payload
     p0 = str(tmp_path / "m0.avro")
     write_avro(p0, schema, recs, codec="null")
     assert os.path.getsize(p) < os.path.getsize(p0)
 
 
-@pytest.mark.parametrize("codec", ["bzip2", "xz"])
+@pytest.mark.parametrize(
+    "codec", ["bzip2", "xz", "deflate", "snappy", "zstandard"]
+)
 def test_avro_container_stdlib_codecs(tmp_path, codec):
     from iceberg_catalog_migrator_spark.sources.iceberg_format import (
         read_avro,
