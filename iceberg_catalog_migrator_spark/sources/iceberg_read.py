@@ -27,8 +27,10 @@ Merge-on-read deletes are APPLIED, both flavors:
 - **equality deletes** (entry content=2, ``equality_ids`` naming the
   key fields) apply sequence-scoped per the spec: a delete hides only
   rows of data files sequenced strictly before it, so a re-appended
-  key revives — identical semantics to the engine's own
-  read_with_deletes, pinned by round-trip tests.
+  key revives, and a null key matches null.
+
+Both flavors go through the engine's one delete kernel
+(:mod:`.deletes`), the same code ``read_with_deletes`` runs.
 
 Deliberate scope, refused loudly rather than silently wrong:
 
@@ -50,6 +52,7 @@ import os
 import re
 import struct
 
+from . import deletes
 from .iceberg_format import read_avro
 from .snapshots import SnapshotError
 
@@ -967,8 +970,9 @@ class IcebergTable:
             # must already read as the declared default when keys match
             if defaults:
                 df = self._apply_initial_defaults(df, kept, defaults)
+            coords = []
             if pos_deletes:
-                dd = (
+                coords.append(
                     self.spark.read.parquet(*pos_deletes)
                     .select(
                         base(F.col("file_path")).alias("__icb_fp"),
@@ -976,15 +980,16 @@ class IcebergTable:
                     )
                     .distinct()
                 )
-                df = df.join(dd, ["__icb_fp", "__icb_pos"], "left_anti")
             if dvs:
-                df = df.join(
-                    _dv_coordinates_df(self.spark, dvs),
-                    ["__icb_fp", "__icb_pos"],
-                    "left_anti",
-                )
-            if eq_deletes:
-                df = self._apply_equality_deletes(df, snap, kept, eq_deletes)
+                coords.append(_dv_coordinates_df(self.spark, dvs))
+            df = deletes.apply_deletes(
+                df,
+                ("__icb_fp", "__icb_pos"),
+                coords,
+                self._eq_groups(snap, eq_deletes) if eq_deletes else [],
+                {os.path.basename(e["file_path"]): e["sequence"] for e in kept},
+                lambda paths: self.spark.read.parquet(*paths),
+            )
             if with_row_ids:
                 first_map = self.spark.createDataFrame(
                     [
@@ -1242,56 +1247,22 @@ class IcebergTable:
             "spec_id bigint, partition string",
         )
 
-    def _apply_equality_deletes(self, df, snap, kept, eq_deletes):
-        """Sequence-scoped equality-delete application (spec rule: a
-        delete applies to rows of data files sequenced STRICTLY before
-        it). The per-file sequence map (metadata-sized) broadcasts;
-        the per-key max-delete-sequence frame is O(deleted rows), so
-        its join strategy is left to the planner — a row survives iff
-        no newer delete lists its key."""
-        from pyspark.sql import functions as F
-
+    def _eq_groups(self, snap, eq_deletes) -> list:
+        """Equality-delete entries as delete-kernel groups: one per
+        ``equality_ids`` set, keyed by the schema's column names, each
+        delete file with its data sequence number."""
         name_by_id = {f["id"]: f["name"] for f in self.schema_fields(snap)}
-        fmap = self.spark.createDataFrame(
-            [
-                (os.path.basename(e["file_path"]), e["sequence"])
-                for e in kept
-            ],
-            "__icb_fp string, __icb_fseq bigint",
-        )
-        df = df.join(F.broadcast(fmap), "__icb_fp", "left")
-        groups: dict[tuple, list[dict]] = {}
+        groups: dict[tuple, list] = {}
         for d in eq_deletes:
-            groups.setdefault(d["equality_ids"], []).append(d)
-        for ids, dels in groups.items():
-            missing = [i for i in ids if i not in name_by_id]
+            missing = [i for i in d["equality_ids"] if i not in name_by_id]
             if missing:
                 raise SnapshotError(
                     f"equality_ids {missing} not in the table schema"
                 )
-            key_cols = [name_by_id[i] for i in ids]
-            keys = None
-            for d in dels:
-                part = (
-                    self.spark.read.parquet(d["file_path"])
-                    .select(*key_cols)
-                    .withColumn("__icb_dseq", F.lit(d["sequence"]))
-                )
-                keys = part if keys is None else keys.unionByName(part)
-            keys = keys.groupBy(*key_cols).agg(
-                F.max("__icb_dseq").alias("__icb_dseq")
+            groups.setdefault(d["equality_ids"], []).append(
+                (d["file_path"], d["sequence"])
             )
-            # no broadcast hint: the key set is O(deleted rows), not
-            # metadata-sized — let the planner (AQE) pick the strategy
-            df = (
-                df.join(keys, key_cols, "left")
-                .filter(
-                    F.col("__icb_dseq").isNull()
-                    | (F.col("__icb_dseq") <= F.col("__icb_fseq"))
-                )
-                .drop("__icb_dseq")
-            )
-        return df.drop("__icb_fseq")
+        return [([name_by_id[i] for i in ids], dels) for ids, dels in groups.items()]
 
 
 def read_iceberg_table(spark, location: str, **kwargs):

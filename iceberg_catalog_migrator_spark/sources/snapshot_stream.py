@@ -74,6 +74,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from .deletes import applying, read_file
+
 SNAPSHOT_STREAM_NAME = "snapshot_commits"
 
 # operations whose new files are pure additions: safe to stream.
@@ -90,6 +92,9 @@ _APPEND_OPS = ("append", "delete", "pos-delete", "record-stats", "merge-insert-o
 # maintenance. The PLAIN tail still rejects them (it streams file
 # additions, and a rewrite's files would re-emit every carried row).
 _ROW_PRESERVING_OPS = ("compact-deletes", "rewrite-small-files", "rewrite-sorted")
+
+# the columns a changelog stream stamps on each row
+_STAMP_COLS = ("_change_type", "_commit_snapshot_id")
 
 
 def _arrow_field_type(t: pa.DataType) -> str:
@@ -156,13 +161,23 @@ def _rename_map(snap: dict, f_rel: str) -> dict | None:
     return m or None
 
 
-def _eq_applies(snap: dict, d: str, f: str) -> bool:
-    """Does equality-delete file ``d`` apply to data file ``f`` under
-    ``snap``? Iceberg's data-sequence rule: only when the delete is
-    sequenced AFTER the data file (legacy defaults: unstamped data file
-    = 0, unstamped delete file = +infinity — applies to everything)."""
-    dseq = snap.get("delete_seqs", {}).get(d, float("inf"))
-    return dseq > snap.get("file_seqs", {}).get(f, 0)
+def _file_plan(path: str, snap: dict, f: str, kind: str, **extra) -> dict:
+    """The :func:`.deletes.read_file` plan for data file ``f``'s rows
+    VISIBLE under ``snap``: the equality deletes that apply to it and
+    the snapshot's vectors excluded, renamed by field id. ``extra``
+    adds or overrides plan fields."""
+    return {
+        "kind": kind,
+        "file": os.path.join(path, f),
+        "rel": f,
+        "exclude": [
+            os.path.join(path, d) for d in applying(snap, snap.get("deletes", []), f)
+        ],
+        "pos_exclude": [os.path.join(path, v) for v in snap.get("pos_deletes", [])],
+        "keys": snap.get("delete_keys", []),
+        "rename": _rename_map(snap, f),
+        **extra,
+    }
 
 
 def _sid_as_of(path: str, ts_ms: int) -> int:
@@ -328,40 +343,23 @@ def _changelog_partitions(
                 if f not in touched:
                     continue
                 plans.append(
-                    {
-                        "kind": "delete",
-                        "file": os.path.join(path, f),
-                        "rel": f,
-                        "pos_include": [os.path.join(path, v) for v in new_vecs],
-                        "pos_exclude": [os.path.join(path, v) for v in pos_parent],
-                        "exclude": [
-                            os.path.join(path, d)
-                            for d in psnap.get("deletes", [])
-                            if _eq_applies(psnap, d, f)
-                        ],
-                        "keys": psnap.get("delete_keys", []),
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
+                    _file_plan(
+                        path,
+                        psnap,
+                        f,
+                        "delete",
+                        sid=sid,
+                        pos_include=[os.path.join(path, v) for v in new_vecs],
+                    )
                 )
             per_commit.append(plans)
             sid = parent
             continue
         for f in snap["files"]:
             if f not in parent_files:
+                # no vector names a file this commit added
                 plans.append(
-                    {
-                        "kind": "insert",
-                        "file": os.path.join(path, f),
-                        "exclude": [
-                            os.path.join(path, d)
-                            for d in deletes
-                            if _eq_applies(snap, d, f)
-                        ],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
+                    _file_plan(path, snap, f, "insert", sid=sid, pos_exclude=[])
                 )
         parent_dels = set(psnap.get("deletes", []))
         new_deletes = [d for d in deletes if d not in parent_dels]
@@ -375,30 +373,27 @@ def _changelog_partitions(
                 else []
             )
             for f in snap["files"]:
-                applying = [d for d in new_deletes if _eq_applies(snap, d, f)]
-                if not applying:
+                applied = applying(snap, new_deletes, f)
+                if not applied:
                     # the file is sequenced past every new delete (a
                     # re-append): none of its rows flip
                     continue
+                # rows the carried vectors already hide were never
+                # visible: a newly-matched key among them is NOT a
+                # newly-deleted row (the plan's pos_exclude)
                 plans.append(
-                    {
-                        "kind": "delete",
-                        "file": os.path.join(path, f),
-                        "rel": f,
-                        "include": [os.path.join(path, d) for d in applying],
-                        "exclude": [
+                    _file_plan(
+                        path,
+                        snap,
+                        f,
+                        "delete",
+                        sid=sid,
+                        include=[os.path.join(path, d) for d in applied],
+                        exclude=[
                             os.path.join(path, d)
-                            for d in old_deletes
-                            if _eq_applies(snap, d, f)
+                            for d in applying(snap, old_deletes, f)
                         ],
-                        # rows the carried vectors already hide were
-                        # never visible: a newly-matched key among them
-                        # is NOT a newly-deleted row
-                        "pos_exclude": [os.path.join(path, v) for v in pos_now],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                        "sid": sid,
-                    }
+                    )
                 )
         per_commit.append(plans)
         sid = parent
@@ -462,95 +457,15 @@ def _rewrite_commit_plans(path: str, snap: dict, psnap: dict) -> list[dict]:
                 "batch diff, or restart the stream from this snapshot"
             )
 
-    plans: list[dict] = []
-    for f in psnap["files"]:
-        if f in snap_files:
-            continue
-        plans.append(
-            {
-                "kind": "delete",
-                "file": os.path.join(path, f),
-                "rel": f,
-                "exclude": [
-                    os.path.join(path, d)
-                    for d in psnap.get("deletes", [])
-                    if _eq_applies(psnap, d, f)
-                ],
-                "pos_exclude": [os.path.join(path, v) for v in pos_parent],
-                "keys": psnap.get("delete_keys", []),
-                "rename": _rename_map(psnap, f),
-                "sid": sid,
-            }
-        )
-    for f in snap["files"]:
-        if f in parent_files:
-            continue
-        plans.append(
-            {
-                "kind": "insert",
-                "file": os.path.join(path, f),
-                "rel": f,
-                "exclude": [
-                    os.path.join(path, d)
-                    for d in snap.get("deletes", [])
-                    if _eq_applies(snap, d, f)
-                ],
-                "pos_exclude": [os.path.join(path, v) for v in pos_now],
-                "keys": snap.get("delete_keys", []),
-                "rename": _rename_map(snap, f),
-                "sid": sid,
-            }
-        )
-    return plans
-
-
-def _keys_table(paths: list, keys: list) -> pa.Table:
-    """Distinct keys-only arrow table from the given delete files —
-    small by the merge-on-read write contract."""
-    import pyarrow.parquet as pq
-
-    t = pa.concat_tables([pq.read_table(p, columns=keys) for p in paths])
-    return t.group_by(keys).aggregate([])
-
-
-def _filter_by_keys(
-    tbl: pa.Table, keys_tbl: pa.Table, keys: list, keep_matching: bool
-) -> pa.Table:
-    """Order-preserving semi/anti selection of ``tbl`` rows whose key
-    tuple appears in ``keys_tbl`` — vectorized (arrow is_in / hash
-    join), replacing the per-batch pandas merges (guide §4.2). Null
-    keys never match (SQL semantics, same as the JVM read path's
-    left_anti in sources/snapshots.py)."""
-    import numpy as np
-    import pyarrow.compute as pc
-
-    if len(keys) == 1:
-        k = keys[0]
-        in_set = pc.is_in(tbl[k], value_set=keys_tbl[k].combine_chunks().drop_null())
-        mask = pc.fill_null(in_set if keep_matching else pc.invert(in_set), False)
-        return tbl.filter(mask)
-    idx = pa.array(np.arange(len(tbl), dtype="int64"))
-    tmp = tbl.select(keys).append_column("__idx", idx)
-    join_type = "left semi" if keep_matching else "left anti"
-    kept = tmp.join(keys_tbl, keys=keys, join_type=join_type)
-    return tbl.take(np.sort(kept["__idx"].to_numpy(zero_copy_only=False)))
-
-
-def _align_to_schema(tbl: pa.Table, schema: pa.Schema) -> pa.Table:
-    """Project an arrow table onto the stream's declared schema: missing
-    columns (file written before an additive evolution) become nulls,
-    extra columns are dropped, types are cast. Executor-side, per
-    batch — the Python analog of the batch reader's mergeSchema."""
-    cols = []
-    for field in schema:
-        if field.name in tbl.column_names:
-            col = tbl[field.name]
-            if col.type != field.type:
-                col = col.cast(field.type)
-        else:
-            col = pa.nulls(len(tbl), type=field.type)
-        cols.append(col)
-    return pa.Table.from_arrays(cols, schema=schema)
+    return [
+        _file_plan(path, psnap, f, "delete", sid=sid)
+        for f in psnap["files"]
+        if f not in snap_files
+    ] + [
+        _file_plan(path, snap, f, "insert", sid=sid)
+        for f in snap["files"]
+        if f not in parent_files
+    ]
 
 
 class _SnapshotStreamReader(DataSourceStreamReader):
@@ -613,7 +528,7 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         }
         drift = []
         for field in self.arrow_schema:
-            if field.name in ("_change_type", "_commit_snapshot_id"):
+            if field.name in _STAMP_COLS:
                 continue
             if field.name not in cur:
                 drift.append(f"{field.name!r} renamed or dropped")
@@ -656,99 +571,29 @@ class _SnapshotStreamReader(DataSourceStreamReader):
     def read(self, partition):
         if partition.value is None:
             return
-        import pyarrow.parquet as pq
-
-        if isinstance(partition.value, str):  # plain append tail
-            for batch in pq.ParquetFile(partition.value).iter_batches():
-                if self.arrow_schema is not None:
-                    yield from _align_to_schema(
-                        pa.Table.from_batches([batch]), self.arrow_schema
-                    ).to_batches()
-                else:
-                    yield batch
-            return
-
         plan = partition.value
+        if isinstance(plan, str):  # plain append tail
+            plan = {"kind": "plain", "file": plan}
         if plan["kind"] == "plain":
-            # schema-tracked tail: rename written columns to the
-            # current names (field-id resolution) before aligning
-            for batch in pq.ParquetFile(plan["file"]).iter_batches():
-                tbl = pa.Table.from_batches([batch])
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-                if self.arrow_schema is not None:
-                    tbl = _align_to_schema(tbl, self.arrow_schema)
+            # a schema-tracked tail's plan renames written columns to
+            # the current names (field-id resolution) before aligning
+            for tbl in read_file(plan, self.arrow_schema):
                 yield from tbl.to_batches()
             return
-
-        # changelog plan: filter this data file against the keys-only
-        # delete files (small — the merge-on-read write contract), then
-        # stamp _change_type. All executor-side; the driver only ever
-        # touched manifest metadata. Row selection runs as vectorized
-        # arrow/numpy masks (guide §4.2) — the pandas merges this used
-        # row-converted every batch and dominated addBatch time.
-        keys = plan["keys"]
-
-        include = _keys_table(plan["include"], keys) if plan.get("include") else None
-        exclude = (
-            _keys_table(plan["exclude"], keys) if plan.get("exclude") and keys else None
-        )
-
-        def _pos_array(paths):
-            """This file's row ordinals named by the given vector files
-            — the per-file slice of the (file, pos) delete side."""
-            import numpy as np
-            import pyarrow.compute as pc
-
-            out = []
-            for p in paths:
-                t = pq.read_table(p, columns=["_file", "_pos"])
-                out.append(
-                    t.filter(pc.equal(t["_file"], plan["rel"]))["_pos"].to_numpy(
-                        zero_copy_only=False
-                    )
-                )
-            return np.unique(np.concatenate(out)) if out else np.array([], dtype="int64")
-
-        pos_inc = _pos_array(plan["pos_include"]) if plan.get("pos_include") else None
-        pos_exc = _pos_array(plan["pos_exclude"]) if plan.get("pos_exclude") else None
-        row_offset = 0
-        for batch in pq.ParquetFile(plan["file"]).iter_batches():
-            tbl = pa.Table.from_batches([batch])
-            base = row_offset
-            row_offset += len(tbl)
-            if pos_inc is not None or pos_exc is not None:
-                import numpy as np
-
-                ords = np.arange(base, base + len(tbl))
-                mask = np.ones(len(tbl), dtype=bool)
-                if pos_inc is not None:
-                    mask &= np.isin(ords, pos_inc)
-                if pos_exc is not None:
-                    mask &= ~np.isin(ords, pos_exc)
-                if not mask.any():
-                    continue
-                if not mask.all():
-                    tbl = tbl.filter(pa.array(mask))
-            if plan.get("rename"):
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-            if include is not None:
-                tbl = _filter_by_keys(tbl, include, keys, keep_matching=True)
-            if exclude is not None and len(tbl):
-                tbl = _filter_by_keys(tbl, exclude, keys, keep_matching=False)
-            if not len(tbl):
-                continue
+        # changelog plan: this data file's rows selected by the delete
+        # kernel (vectors and keys-only delete files, small by the
+        # merge-on-read write contract), then stamped. All
+        # executor-side; the driver only ever touched manifest metadata.
+        schema = self.arrow_schema
+        if schema is not None:
+            schema = pa.schema([f for f in schema if f.name not in _STAMP_COLS])
+        for tbl in read_file(plan, schema):
             tbl = tbl.append_column(
                 "_change_type", pa.array([plan["kind"]] * len(tbl), pa.string())
             ).append_column(
                 "_commit_snapshot_id",
                 pa.array([plan["sid"]] * len(tbl), pa.int64()),
             )
-            if self.arrow_schema is not None:
-                tbl = _align_to_schema(tbl, self.arrow_schema)
             yield from tbl.to_batches()
 
     def commit(self, end):
@@ -923,9 +768,8 @@ class _SnapshotBatchReader(DataSourceReader):
     def partitions(self):
         snap = _load_snap(self.path, self.sid)
         stats = snap.get("file_stats", {})
-        deletes = snap.get("deletes", []) if self.apply_deletes else []
-        key_cols = snap.get("delete_keys", []) if deletes else []
-        pos_deletes = snap.get("pos_deletes", []) if self.apply_deletes else []
+        # apply_deletes=false reads the raw files
+        skip = {} if self.apply_deletes else {"exclude": [], "pos_exclude": []}
         # columnar prune first: the sidecar answers the pushed bounds
         # as one vectorized parquet scan (O(matching files) driver
         # memory) instead of a per-file per-column dict probe; the
@@ -967,84 +811,15 @@ class _SnapshotBatchReader(DataSourceReader):
                 if pruned:
                     continue
             parts.append(
-                InputPartition(
-                    {
-                        "kind": "insert",
-                        "file": os.path.join(self.path, f),
-                        # table-relative name: pos-delete vectors key on it
-                        "rel": f,
-                        "exclude": [
-                            os.path.join(self.path, d)
-                            for d in deletes
-                            if _eq_applies(snap, d, f)
-                        ],
-                        "pos_exclude": [
-                            os.path.join(self.path, d) for d in pos_deletes
-                        ],
-                        "keys": key_cols,
-                        "rename": _rename_map(snap, f),
-                    }
-                )
+                InputPartition(_file_plan(self.path, snap, f, "insert", **skip))
             )
         return parts or [InputPartition(None)]
 
     def read(self, partition):
         if partition.value is None:
             return
-        import pyarrow.parquet as pq
-
-        plan = partition.value
-        keys = plan["keys"]
-        # the keys-only delete frame is per FILE, not per record batch:
-        # build it once (the streaming reader does the same); row
-        # selection below is vectorized arrow/numpy, not pandas merges
-        # (guide §4.2)
-        excl = (
-            _keys_table(plan["exclude"], keys)
-            if plan["exclude"] and keys
-            else None
-        )
-        # positional vectors: this task filters only ITS file's row
-        # ordinals out of the (file, pos) pairs — the per-file slice of
-        # the delete side, O(deleted rows in this file) memory
-        doomed_pos = None
-        if plan.get("pos_exclude"):
-            import numpy as np
-            import pyarrow.compute as pc
-
-            chunks = []
-            for p in plan["pos_exclude"]:
-                t = pq.read_table(p, columns=["_file", "_pos"])
-                mask = pc.equal(t["_file"], plan["rel"])
-                chunks.append(t.filter(mask)["_pos"].to_numpy(zero_copy_only=False))
-            if chunks:
-                doomed_pos = np.unique(np.concatenate(chunks))
-                if not len(doomed_pos):
-                    doomed_pos = None
-        row_offset = 0
-        for batch in pq.ParquetFile(plan["file"]).iter_batches():
-            tbl = pa.Table.from_batches([batch])
-            if doomed_pos is not None:
-                import numpy as np
-
-                ords = np.arange(row_offset, row_offset + len(tbl))
-                row_offset += len(tbl)
-                mask = ~np.isin(ords, doomed_pos)
-                if not mask.any():
-                    continue
-                if not mask.all():
-                    tbl = tbl.filter(pa.array(mask))
-            else:
-                row_offset += len(tbl)
-            if plan.get("rename"):
-                tbl = tbl.rename_columns(
-                    [plan["rename"].get(c, c) for c in tbl.column_names]
-                )
-            if excl is not None:
-                tbl = _filter_by_keys(tbl, excl, keys, keep_matching=False)
-                if not len(tbl):
-                    continue
-            yield from _align_to_schema(tbl, self.arrow_schema).to_batches()
+        for tbl in read_file(partition.value, self.arrow_schema):
+            yield from tbl.to_batches()
 
 
 # ------------------------------------------------------------ batch write

@@ -57,6 +57,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+from . import deletes
+
 
 class SnapshotError(RuntimeError):
     pass
@@ -1517,9 +1519,8 @@ class SnapshotTable:
             else:
                 keys = kb if ka is None else ka if kb is None else kb.unionByName(ka).distinct()
                 key_cols = snap_a["delete_keys"] if dels_a else snap_b["delete_keys"]
-                cands.append(
-                    _reader(carried, snap_a).join(keys, key_cols, "left_semi")
-                )
+                rows = _reader(carried, snap_a)
+                cands.append(deletes.match_keys(rows, keys, key_cols, "left_semi"))
         if pos_b_files != pos_a_files and carried:
             both = (
                 pos_b.unionByName(pos_a)
@@ -1576,12 +1577,16 @@ class SnapshotTable:
                 if len(parts) == 1
                 else parts[0].unionByName(parts[1], allowMissingColumns=True)
             )
-            if pos is not None:  # this side's vectors hide physical rows
-                rows = rows.join(pos, ["_file", "_pos"], "left_anti")
-            # equality visibility is SEQUENCE-AWARE (a key re-appended
-            # after its deletion is visible): applied while the rows
-            # still carry their _file identity
-            rows = _apply_eq_deletes(self, snap, rows, snap["files"])
+            # this side's vectors and equality keys, applied while the
+            # rows still carry their (_file, _pos) identity
+            rows = deletes.apply_deletes(
+                rows,
+                ("_file", "_pos"),
+                [pos] if pos is not None else [],
+                deletes.snapshot_groups(snap),
+                deletes.file_seqs(snap, snap["files"]),
+                self._read_files,
+            )
             return rows.drop("_file", "_pos")
 
         side_b = _side(removed, snap_b, dels_b, pos_b)
@@ -2847,7 +2852,9 @@ def merge_upsert(
         # materializes them, and the commit below drops the consumed
         # delete entries
         if lineage:
-            current = _observe_visible(_visible_with_lineage(table, snap, touched))
+            current = _observe_visible(
+                _resolve_visible(table, snap, touched, row_ids=True)
+            )
             keep = current.join(delta.select(*key_cols), key_cols, "left_anti")
             # an updated row KEEPS its _row_id (matched mapping);
             # unmatched delta rows get NULL here, fresh ids below.
@@ -3044,12 +3051,8 @@ def merge_into(
     # (correctly-typed) target side: every source row lands in the
     # NOT MATCHED clauses
     lineage = bool(psnap.get("row_lineage"))
-    _visible = _visible_with_lineage if lineage else _resolve_visible
-    cur = (
-        _visible(table, psnap, touched)
-        if touched
-        else _visible(table, psnap, psnap["files"]).limit(0)
-    )
+    cur = _resolve_visible(table, psnap, touched or psnap["files"], row_ids=lineage)
+    cur = cur if touched else cur.limit(0)
     # visible-count maintenance: the touched files' visible rows are
     # exactly what this COW rewrite replaces; observe() counts them on
     # the SAME job that writes the merge output — no extra scan
@@ -3258,11 +3261,12 @@ def delete_where(
 
         cand = _key_range_candidates(table, snap, key_cols[0], kdf)
         n_hidden = (
-            (
-                _resolve_visible(table, snap, cand)
-                .join(F.broadcast(kdf), key_cols, "left_semi")
-                .count()
-            )
+            deletes.match_keys(
+                _resolve_visible(table, snap, cand),
+                F.broadcast(kdf),
+                key_cols,
+                "left_semi",
+            ).count()
             if cand
             else 0
         )
@@ -3276,10 +3280,18 @@ def _key_range_candidates(
     """Files whose recorded [min, max] on ``key0`` intersects the key
     set's range — files without recorded stats conservatively count.
     The same footerless-stats shape merge pruning uses, so a delete's
-    commit-time counting scan is delta-bounded, not table-bounded."""
+    commit-time counting scan is delta-bounded, not table-bounded. A
+    null ``key0`` hides null-keyed rows, which no [min, max] bounds, so
+    it makes every file a candidate."""
     from pyspark.sql import functions as F
 
-    b = keys.agg(F.min(key0).alias("lo"), F.max(key0).alias("hi")).first()
+    b = keys.agg(
+        F.min(key0).alias("lo"),
+        F.max(key0).alias("hi"),
+        F.max(F.col(key0).isNull()).alias("has_null"),
+    ).first()
+    if b.has_null:
+        return list(snap["files"])
     if b.lo is None:
         return []
     stats = snap.get("file_stats", {})
@@ -3356,11 +3368,11 @@ def read_with_deletes(
     snapshot_id: int | None = None,
     ref: str | None = None,
 ) -> DataFrame:
-    """Current rows minus merge-on-read deletes — positional vectors
-    first (anti-join on the (file, pos) row identity), then
-    equality-deleted keys (anti-join on the key columns); both delete
-    sides are small and typically broadcastable. ``ref`` reads a
-    branch head (e.g. to audit a staged delete)."""
+    """Current rows minus merge-on-read deletes, applied by the one
+    delete kernel (:mod:`.deletes`): positional vectors on the (file,
+    pos) row identity, then equality-deleted keys under the sequence
+    rule, null keys matching null. ``ref`` reads a branch head (e.g. to
+    audit a staged delete)."""
     if snapshot_id is not None and ref is not None:
         raise ValueError("pass snapshot_id or ref, not both")
     sid = snapshot_id if snapshot_id is not None else table.head(ref if ref is not None else MAIN)
@@ -3368,68 +3380,6 @@ def read_with_deletes(
         raise SnapshotError(f"no committed snapshot at {table.path}")
     snap = table._load_snap(sid)
     return _resolve_visible(table, snap, snap["files"])
-
-
-def _eq_exempt_files(snap: dict, files: list[str]) -> list[str]:
-    """Data files among ``files`` escaping AT LEAST ONE pending
-    equality delete — sequenced at/after the OLDEST delete file (a key
-    re-appended after its deletion, or a merge's own output). A file
-    between the oldest and a younger delete's sequence is still hidden
-    by the younger deletes, so this is a TRIGGER for the per-file
-    sequence-aware path, not a skip-deletes-entirely list. Empty on
-    every delete-is-newest history, so the simple anti-join — and its
-    exact physical plan — stays the common path."""
-    dels = snap.get("deletes", [])
-    if not dels:
-        return []
-    dseqs = snap.get("delete_seqs", {})
-    min_dseq = min(dseqs.get(d, float("inf")) for d in dels)
-    fseqs = snap.get("file_seqs", {})
-    return [f for f in files if fseqs.get(f, 0) >= min_dseq]
-
-
-def _apply_eq_deletes(
-    table: SnapshotTable, snap: dict, df: DataFrame, files: list[str]
-) -> DataFrame:
-    """Hide equality-deleted rows of ``df`` (rows of ``files``) under
-    ``snap``'s delete state, SEQUENCE-AWARE: a delete file applies only
-    to rows whose data file is sequenced before it (Iceberg's
-    data-sequence-number rule; unstamped legacy files read as 0,
-    unstamped legacy delete files as +infinity). When no file is
-    exempt — every history whose deletes are newest — this is the
-    plain broadcastable anti-join. Otherwise ``df`` must carry the
-    ``_file`` column; the caller drops it afterwards."""
-    from pyspark.sql import functions as F
-
-    dels = snap.get("deletes", [])
-    if not dels:
-        return df
-    key_cols = snap["delete_keys"]
-    exempt = _eq_exempt_files(snap, files)
-    if not exempt:
-        return df.join(table._read_files(dels), key_cols, "left_anti")
-    dseqs = snap.get("delete_seqs", {})
-    fseqs = snap.get("file_seqs", {})
-    keys = None
-    for d in dels:
-        part = (
-            table._read_files([d])
-            .select(*key_cols)
-            .withColumn("_dseq", F.lit(float(dseqs.get(d, float("inf")))))
-        )
-        keys = part if keys is None else keys.unionByName(part)
-    # a key hides a row iff SOME delete file newer than the row's data
-    # file lists it — max per key, one broadcastable frame
-    keys = keys.groupBy(*key_cols).agg(F.max("_dseq").alias("_dseq"))
-    fmap = table.spark.createDataFrame(
-        [(f, int(fseqs.get(f, 0))) for f in files], "_file string, _fseq bigint"
-    )
-    return (
-        df.join(F.broadcast(fmap), "_file", "left")
-        .join(F.broadcast(keys), key_cols, "left")
-        .filter(F.col("_dseq").isNull() | (F.col("_dseq") <= F.col("_fseq")))
-        .drop("_dseq", "_fseq")
-    )
 
 
 def _observed_or_counted(obs, df: DataFrame) -> int:
@@ -3446,25 +3396,40 @@ def _observed_or_counted(obs, df: DataFrame) -> int:
 
 
 def _resolve_visible(
-    table: SnapshotTable, snap: dict, files: list[str], keep_pos: bool = False
+    table: SnapshotTable,
+    snap: dict,
+    files: list[str],
+    keep_pos: bool = False,
+    row_ids: bool = False,
 ) -> DataFrame:
     """The VISIBLE rows of ``files`` under ``snap``'s delete state:
-    field-id-resolved, minus positional vectors (anti-join on the
-    (file, pos) row identity), minus equality-deleted keys
-    (sequence-aware). This is both the whole-table read
-    (:func:`read_with_deletes`) and the touched-file read of a merge
-    over pending MOR deletes. ``keep_pos`` retains the ``(_file,
-    _pos)`` identity columns (positional deletes record visible-row
-    coordinates through it)."""
+    field-id-resolved, minus the pending deletes the kernel
+    (:func:`.deletes.apply_deletes`) hides. This is both the
+    whole-table read (:func:`read_with_deletes`) and the touched-file
+    read of a merge over pending MOR deletes. ``keep_pos`` retains the
+    ``(_file, _pos)`` identity columns (positional deletes record
+    visible-row coordinates through it). ``row_ids`` reads through
+    :func:`_attach_row_ids` instead, so lineage merges and maintenance
+    keep each row's ``_row_id`` across their rewrites."""
     pos_deletes = snap.get("pos_deletes", [])
-    need_id = keep_pos or bool(pos_deletes) or bool(_eq_exempt_files(snap, files))
-    df = table._resolve_files(snap, files, with_pos=need_id)
-    if snap.get("row_lineage"):
-        df = df.drop("_row_id")  # surfaced by read_with_lineage only
-    if pos_deletes:
-        pos = table._read_files(pos_deletes).select("_file", "_pos").distinct()
-        df = df.join(pos, ["_file", "_pos"], "left_anti")
-    df = _apply_eq_deletes(table, snap, df, files)
+    groups = deletes.snapshot_groups(snap)
+    seqs = deletes.file_seqs(snap, files)
+    if row_ids:
+        need_id = True
+        df = _attach_row_ids(table, snap, files)
+    else:
+        need_id = keep_pos or bool(pos_deletes) or deletes.needs_sequences(groups, seqs)
+        df = table._resolve_files(snap, files, with_pos=need_id)
+        if snap.get("row_lineage"):
+            df = df.drop("_row_id")  # surfaced by read_with_lineage only
+    coords = (
+        [table._read_files(pos_deletes).select("_file", "_pos").distinct()]
+        if pos_deletes
+        else []
+    )
+    df = deletes.apply_deletes(
+        df, ("_file", "_pos"), coords, groups, seqs, table._read_files
+    )
     return df.drop("_file", "_pos") if (need_id and not keep_pos) else df
 
 
@@ -3567,22 +3532,7 @@ def read_with_lineage(
     snap = table._load_snap(sid)
     if not snap.get("row_lineage"):
         raise SnapshotError("enable_row_lineage first")
-    return _visible_with_lineage(table, snap, snap["files"])
-
-
-def _visible_with_lineage(
-    table: SnapshotTable, snap: dict, files: list[str]
-) -> DataFrame:
-    """Visible rows of ``files`` with ``_row_id`` attached — the
-    lineage twin of :func:`_resolve_visible` (merges and maintenance on
-    lineage tables read through this so ids survive their rewrites)."""
-    df = _attach_row_ids(table, snap, files)
-    pos_deletes = snap.get("pos_deletes", [])
-    if pos_deletes:
-        pos = table._read_files(pos_deletes).select("_file", "_pos").distinct()
-        df = df.join(pos, ["_file", "_pos"], "left_anti")
-    df = _apply_eq_deletes(table, snap, df, files)
-    return df.drop("_file", "_pos")
+    return _resolve_visible(table, snap, snap["files"], row_ids=True)
 
 
 def _assign_new_row_ids(
@@ -3618,7 +3568,7 @@ def compact_deletes(table: SnapshotTable, ref: str = MAIN) -> int:
     extra = {}
     if snap.get("row_lineage"):
         # lineage survives compaction: ids ride the rewrite physically
-        survivors = _visible_with_lineage(table, snap, snap["files"])
+        survivors = _resolve_visible(table, snap, snap["files"], row_ids=True)
         files = table._write_data_files(survivors)
         extra["lineage_files"] = {f: True for f in files}
     else:

@@ -1372,15 +1372,14 @@ def test_connector_as_of_timestamp_time_travel(spark, table, tmp_path):
 
 # ------------------------------------------------ vectorized key filters
 def test_filter_by_keys_semi_anti_single_and_multi_key():
-    """The arrow semi/anti kernels (r17: replaced per-batch pandas
-    merges) must preserve row order, handle single- and multi-key
-    selections identically, and never match null keys (SQL semantics,
-    same as the JVM read path's left_anti)."""
+    """The Arrow key-match kernel keeps row order, treats single- and
+    multi-key selections alike, and follows the Iceberg spec's
+    equality-delete rule: a null delete key matches a null data key
+    (spec example: ``4 | NULL`` deletes ``id = 4 AND category IS
+    NULL``), and a non-null key never matches a null one."""
     import pyarrow as pa
 
-    from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
-        _filter_by_keys,
-    )
+    from iceberg_catalog_migrator_spark.sources.deletes import _key_mask
 
     tbl = pa.table(
         {
@@ -1389,37 +1388,47 @@ def test_filter_by_keys_semi_anti_single_and_multi_key():
             "v": [30, 10, 99, 20, 11],
         }
     )
+
+    def semi(keys_tbl, keys):
+        return tbl.filter(_key_mask(tbl, keys_tbl, keys))["v"].to_pylist()
+
+    def anti(keys_tbl, keys):
+        return tbl.filter(~_key_mask(tbl, keys_tbl, keys))["v"].to_pylist()
+
     keys1 = pa.table({"k": [1, 2]})
-    semi = _filter_by_keys(tbl, keys1, ["k"], keep_matching=True)
-    assert semi["v"].to_pylist() == [10, 20, 11]  # order preserved
-    anti = _filter_by_keys(tbl, keys1, ["k"], keep_matching=False)
-    # null key never matches -> survives the anti side
-    assert anti["v"].to_pylist() == [30, 99]
-    # a null IN THE KEY SET must not start matching null rows either
+    assert semi(keys1, ["k"]) == [10, 20, 11]  # order preserved
+    # a null data key is not matched by non-null delete keys
+    assert anti(keys1, ["k"]) == [30, 99]
+    # a null IN THE KEY SET matches the null-keyed row (spec rule)
     keys_null = pa.table({"k": pa.array([1, None], type=pa.int64())})
-    anti2 = _filter_by_keys(tbl, keys_null, ["k"], keep_matching=False)
-    assert 99 in anti2["v"].to_pylist()
+    assert semi(keys_null, ["k"]) == [10, 99, 11]
+    assert anti(keys_null, ["k"]) == [30, 20]
     # multi-key goes through the arrow hash-join path
     keys2 = pa.table({"k": [1, 2], "g": ["a", "b"]})
-    semi2 = _filter_by_keys(tbl, keys2, ["k", "g"], keep_matching=True)
-    assert semi2["v"].to_pylist() == [20, 11]
-    anti3 = _filter_by_keys(tbl, keys2, ["k", "g"], keep_matching=False)
-    assert anti3["v"].to_pylist() == [30, 10, 99]
+    assert semi(keys2, ["k", "g"]) == [20, 11]
+    assert anti(keys2, ["k", "g"]) == [30, 10, 99]
+    # ... where a null key column matches null too, the others by value
+    keys3 = pa.table(
+        {"k": pa.array([None, None], type=pa.int64()), "g": ["a", "c"]}
+    )
+    assert semi(keys3, ["k", "g"]) == [99]
+    assert anti(keys3, ["k", "g"]) == [30, 10, 20, 11]
+    keys4 = pa.table({"k": pa.array([None], type=pa.int64()), "g": ["b"]})
+    assert semi(keys4, ["k", "g"]) == []
 
 
 def test_keys_table_distinct_union():
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from iceberg_catalog_migrator_spark.sources.snapshot_stream import (
-        _keys_table,
-    )
+    from iceberg_catalog_migrator_spark.sources.deletes import _keys_table
     import tempfile, os
 
     with tempfile.TemporaryDirectory() as tmp:
         p1, p2 = os.path.join(tmp, "a.parquet"), os.path.join(tmp, "b.parquet")
         pq.write_table(pa.table({"k": [1, 2, 2], "x": [0, 0, 0]}), p1)
-        pq.write_table(pa.table({"k": [2, 3], "x": [0, 0]}), p2)
+        pq.write_table(pa.table({"k": [2, 3, None, None], "x": [0] * 4}), p2)
         out = _keys_table([p1, p2], ["k"])
-        assert sorted(out["k"].to_pylist()) == [1, 2, 3]
+        # a null key is kept, once: it hides null-keyed rows
+        assert sorted(out["k"].to_pylist(), key=str) == [1, 2, 3, None]
         assert out.column_names == ["k"]

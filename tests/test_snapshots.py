@@ -2786,11 +2786,15 @@ def test_rewrite_manifests_checkpoints_head_to_full_form(spark, table):
         rewrite_manifests,
     )
 
+    # file counts fixed independently of the core count: 4 files per
+    # setup append, ONE file on the final append, so that append's delta
+    # (weight 4 against 17 files) stays materially smaller than the
+    # full form at any local[N]
     for lo in range(0, 40, 10):
         table.append(
-            spark.range(lo, lo + 10).select(
-                F.col("id").alias("k"), (F.col("id") % 3).alias("v")
-            )
+            spark.range(lo, lo + 10)
+            .select(F.col("id").alias("k"), (F.col("id") % 3).alias("v"))
+            .repartition(4)
         )
     delete_where(table, ["k"], spark.range(0, 40, 8).select(F.col("id").alias("k")))
     head = table.current_snapshot_id()
@@ -2815,7 +2819,9 @@ def test_rewrite_manifests_checkpoints_head_to_full_form(spark, table):
     }
     # the next commit's delta bases on the checkpoint: depth restarts
     table.append(
-        spark.range(100, 105).select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+        spark.range(100, 105)
+        .select(F.col("id").alias("k"), F.lit(0).cast("long").alias("v"))
+        .coalesce(1)
     )
     assert _manifest_depth(table.path, table.current_snapshot_id())[0] == 1
 
